@@ -623,13 +623,21 @@ object TextAnalysis {
 
   /** BM25 ranked retrieval over the token index — the scoring layer above
     * [[searchAll]]'s boolean matching. Disjunctive (OR) semantics: any doc
-    * containing at least one query term is scored.
+    * containing at least one query term is scored. `idCol` must be unique.
     *
-    * Plan shape at 100 TB: per-doc term frequencies and document lengths
-    * are ONE aggregation pass; document frequencies are computed only for
-    * the query's terms (a handful of rows — broadcast); avgdl is a 1-row
-    * aggregate cross-joined in. Scoring touches only the matched postings,
-    * never the corpus.
+    * Plan shape: the fused `term_counts` kernel
+    * ([[graft.functions.TextExpressions.TermCounts]]) gives each doc's
+    * `[dl, tf_0 … tf_{m-1}]` in one byte scan of `lower(text)` — no token
+    * strings, no explode, no (doc, token) aggregation, no joins. Three
+    * jobs per call:
+    *  1. corpus statistics — `n_docs`, avgdl and every term's df — are ONE
+    *     1-row aggregate over that projection, fetched eagerly as a bounded
+    *     parameter (2 + |terms| numbers, whatever the corpus size);
+    *  2. idf for all terms is one [[graft.functions.ExactMath.lnColumn]]
+    *     pass over a |terms|-row local frame (folded on the driver, no job);
+    *  3. scoring is one narrow projection of the kernel with idf and avgdl
+    *     as literals, then a top-k (`TakeOrderedAndProject`): the corpus
+    *     never shuffles.
     *
     * Scoring is bit-reproducible across engines by construction — every
     * double operation is fully specified:
@@ -648,56 +656,43 @@ object TextAnalysis {
       topK: Int = 20): DataFrame = {
     val t = terms.map(_.toLowerCase(java.util.Locale.ROOT)).distinct
     require(t.nonEmpty, "at least one search term")
-    // r13: the corpus never shuffles. The former shape built the FULL
-    // (doc_id, token) tf table — a corpus-scale exchange of one row per
-    // token occurrence — only to (a) sum it back into per-doc lengths and
-    // (b) keep the |terms| matching rows. Both needs are served without
-    // the corpus exchange: dl = size(tokens) is a narrow per-row
-    // projection (sum of tf over a doc IS its token count, zero-token
-    // docs absent from both forms), avgdl partial-aggregates map-side,
-    // and tf is built from the term-FILTERED token stream (filter before
-    // the exchange — only matching occurrences are ever shuffled), with
-    // dl carried through the explode so no dl join is needed. Two corpus
-    // scans replace one scan plus two corpus-wide shuffles — at 100 TB a
-    // re-read is cheap, a full exchange of per-token rows is not.
-    val withToks = docs.select(col(idCol).as("doc_id"),
-      tokens(lower(col(textCol))).as("__toks"))
-    val dlAll = withToks
-      .select(col("doc_id"), size(col("__toks")).as("dl"))
-      .where(col("dl") > 0)
-    val avgdl = dlAll.select(
-      (sum(col("dl")).cast(DoubleType) / count(lit(1))).as("avgdl"))
-    val n = docs.select(count(lit(1)).as("n_docs"))
-    val tf = withToks
-      .select(col("doc_id"), size(col("__toks")).as("dl"),
-        explode(col("__toks")).as("token"))
-      .where(col("token").isin(t: _*))
-      .groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-    val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    // the broadcast HINT on df is BOUNDED, unlike the corpus-derived
-    // vocabulary tables above: df is pruned to the query's own terms
-    // before the join, so it holds at most |terms| rows regardless of
-    // corpus size — a forced hint here can never outgrow the driver
-    val matched = tf
-      .join(broadcast(df), Seq("token"))
-      .crossJoin(broadcast(n))
-      .crossJoin(broadcast(avgdl))
+    val counts = graft.functions.TextFunctions.termCounts(lower(col(textCol)), t)
+      .as("__c")
+    val dl = col("__c").getItem(0)
+    def tf(i: Int): Column = col("__c").getItem(i + 1)
+    // 1. corpus statistics: [n_docs, avgdl, df_0 … df_{m-1}]
+    val stats = docs.select(counts)
+      .agg(count(lit(1)),
+        sum(when(dl > 0, dl)).cast(DoubleType) / count(when(dl > 0, dl)) +:
+          t.indices.map(i => count(when(tf(i) > 0, true))): _*)
+      .head()
+    // 2. idf of every term: one deterministic-ln pass, no job
+    val nDocs = stats.getLong(0)
     val idfInput =
       (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)
-    val withIdf = graft.functions.ExactMath.lnColumn(
-      matched.withColumn("__idf_x", idfInput), "__idf_x", "__idf")
-    val tfNorm = col("tf") * (lit(k1) + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl")))
+    val idfs = graft.functions.ExactMath.lnColumn(
+        docs.sparkSession.createDataFrame(
+            t.indices.map(i => (i, nDocs, stats.getLong(i + 2))))
+          .toDF("i", "n_docs", "df").withColumn("__idf_x", idfInput),
+        "__idf_x", "__idf")
+      .select("i", "__idf").collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val avgdl = lit(stats.get(1)).cast(DoubleType) // null iff no doc has a token
+    def tfNorm(i: Int): Column = tf(i) * (lit(k1) + 1.0) /
+      (tf(i) + lit(k1) * (lit(1.0) - lit(b) + lit(b) * dl / avgdl))
+    // 3. scoring: one narrow projection, then the top-k
     val fxScale = 1099511627776.0 // 2^40: exact scaling, ~12 kept decimal digits
-    withIdf
-      .withColumn("term_score", col("__idf") * tfNorm)
-      .withColumn("__ts_fx", floor(col("term_score") * lit(fxScale)))
-      .groupBy(col("doc_id"))
-      .agg((sum(col("__ts_fx")) / lit(fxScale)).as("score"),
-        count(lit(1)).as("n_matched"))
-      .orderBy(col("score").desc, col("doc_id"))
+    val fx = t.indices.map(i => when(tf(i) > 0,
+      floor(lit(idfs(i)) * tfNorm(i) * lit(fxScale))).otherwise(0L))
+    val matched = t.indices.map(i => when(tf(i) > 0, 1L).otherwise(0L))
+    docs.select(col(idCol).as("doc_id"), counts)
+      .select(col("doc_id"), (fx.reduce(_ + _) / lit(fxScale)).as("score"),
+        matched.reduce(_ + _).as("n_matched"))
+      // unmatched docs sort last and are dropped AFTER the limit: a filter
+      // below it would be pushed under the kernel projection, inlining the
+      // kernel once per term
+      .orderBy((col("n_matched") > 0).desc, col("score").desc, col("doc_id"))
       .limit(topK)
+      .where(col("n_matched") > 0)
   }
 
   /** Vocabulary construction — the deterministic precursor of tokenizer

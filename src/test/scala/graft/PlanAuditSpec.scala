@@ -398,8 +398,6 @@ class PlanSweepSpec extends SparkSpec {
   // deliberate exceptions:
   //  - q_ann_recall cross-joins a BROADCAST handful of probe vectors (the
   //    standard batch-ANN scoring shape)
-  //  - q_bm25_search cross-joins two 1-ROW broadcast scalars (corpus size,
-  //    avg doc length) onto the matched postings
   //  - q_ann_quantized cross-joins the 1-ROW broadcast query-codes vector
   //  - q_triangle_count cross-joins three 1-ROW broadcast aggregates
   //    (n_nodes, n_edges, n_triangles) into the single stats row
@@ -417,7 +415,7 @@ class PlanSweepSpec extends SparkSpec {
   //    onto the domain-bounded frequency table; the thresholds row onto
   //    the length projection)
   private val cartesianOk =
-    Set("q_ann_recall", "q_bm25_search", "q_ann_quantized", "q_triangle_count",
+    Set("q_ann_recall", "q_ann_quantized", "q_triangle_count",
       "q_unigram_logprob", "q_bigram_logprob", "q_pagerank",
       "q_mixture_temperature", "q_length_gate")
 
@@ -508,6 +506,10 @@ class RuntimeFilterSpec extends SparkSpec {
   }
 }
 
+/** Plan traversal that descends into AQE query stages. */
+private object AqePlan
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
 /** The corpus-derived vocabulary tables in TextAnalysis (oovRate's vocab,
   * unigramLogProb's lm) must be AQE-GATED, never hint-forced: a
   * minCount-floored vocabulary still grows with corpus size, and a forced
@@ -523,9 +525,18 @@ class VocabJoinFallbackSpec extends SparkSpec {
 
   private def docs = spark.read.parquet(s"$sf/documents.parquet")
 
-  private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
-    df.collect() // run so the AQE final plan is the inspectable one
-    df.queryExecution.executedPlan.toString
+  /** Whether the final (AQE) plan of an already-run `df` holds a
+    * broadcast hash join keyed on `token`, read from the join nodes' key
+    * references (robust to casts, aliases or `knownnotnull` wrapping the
+    * key), plus the plan text for failure messages.
+    */
+  private def tokenBroadcast(df: org.apache.spark.sql.DataFrame): (Boolean, String) = {
+    val p = df.queryExecution.executedPlan
+    val keys = AqePlan.collect(p) {
+      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
+        j.leftKeys.flatMap(_.references.map(_.name))
+    }
+    (keys.exists(_.contains("token")), p.toString)
   }
 
   test("oovRate: AQE broadcasts a small vocab, falls back to shuffle above the limit") {
@@ -537,19 +548,20 @@ class VocabJoinFallbackSpec extends SparkSpec {
     // vocab subtree itself legitimately carries an explicitly-hinted
     // bounded broadcast (globalRank's per-partition offset table — ≤
     // #partitions rows by construction) that survives a closed threshold
-    val tokenBhj = "BroadcastHashJoin \\[token#".r
     try {
-      val small = finalPlan(TextAnalysis.oovRate(docs, "doc_id", "text", vocab))
-      assert(tokenBhj.findFirstIn(small).isDefined,
-        s"AQE did not broadcast a fitting vocab:\n$small")
+      val small = TextAnalysis.oovRate(docs, "doc_id", "text", vocab)
+      small.collect() // run so the AQE final plan is the inspectable one
+      val (smallBhj, smallPlan) = tokenBroadcast(small)
+      assert(smallBhj, s"AQE did not broadcast a fitting vocab:\n$smallPlan")
       c.set("spark.sql.autoBroadcastJoinThreshold", "-1") // vocab "outgrew" it
       val big = TextAnalysis.oovRate(docs, "doc_id", "text", vocab)
+        .orderBy("doc_id")
       // collect the fallback rows WHILE the threshold is closed — an
       // except() after restoring the conf would re-plan both sides on
       // the broadcast path and prove nothing
-      val shuffledRows = big.orderBy("doc_id").collect().toSeq
-      val bigPlan = big.queryExecution.executedPlan.toString
-      assert(tokenBhj.findFirstIn(bigPlan).isEmpty,
+      val shuffledRows = big.collect().toSeq
+      val (bigBhj, bigPlan) = tokenBroadcast(big)
+      assert(!bigBhj,
         s"vocab join still broadcast with the hint path closed:\n$bigPlan")
       // degraded plan, identical answer
       c.unset("spark.sql.autoBroadcastJoinThreshold")
